@@ -83,7 +83,7 @@ def merge_scd2_open(
     """Route the five SCD2 branches out of one full-outer join over the
     *open* slice of the store (closed rows are the caller's concern — they
     pass through unchanged and, at scale, should never be re-read or
-    re-written; see Scd2Store).
+    re-written; Scd2Store keeps them in closed dirs its merges only add to).
 
     ``closed_keys`` — one-column (KEY_HASH) frame of keys that exist only
     as closed rows; new rows for those keys are dropped (reference NOT-IN
@@ -172,7 +172,7 @@ def merge_scd2(
     Output columns = ``current_df``'s columns. The store is consumed three
     times (open slice, closed slice, closed-key set) — cheap pruned
     re-scans for a parquet-backed store; for a plan-backed store cache it,
-    or use Scd2Store which keeps the slices in separate partitions.
+    or use Scd2Store, whose manifest lists the two slices as separate dirs.
     """
     upper = F.to_date(F.lit(SCD2_UPPER_BOUND))
     cur_open = current_df.filter(F.col(VALID_TO) == upper)

@@ -122,8 +122,11 @@ def streaming_scd2_merge(
     currents: dict | None = None,
 ):
     """Continuous SCD Type 2: each micro-batch is stamped and merged into an
-    Scd2Store (open-partition overwrite + closed-partition append), so the
-    one-open-row-per-key invariant holds at every micro-batch boundary.
+    Scd2Store, which publishes each merge as one manifest commit (one data
+    write into a fresh version dir, then a manifest rename), so the
+    one-open-row-per-key invariant holds at every micro-batch boundary and
+    a batch the engine retries after a crash converges to the no-crash
+    store.
 
     ``currents``: None (production default) stamps each micro-batch with a
     fresh wall-clock run context; passing a context pins EVERY micro-batch

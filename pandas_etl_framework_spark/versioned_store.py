@@ -13,16 +13,15 @@ VISIBILITY:
   is the previous list plus one dir (no data rewrite), an overwrite is a
   fresh single-dir list;
 - readers resolve the latest manifest and read exactly its directories:
-  crashes before the rename are invisible, and old versions stay readable
-  (time travel) until explicitly vacuumed.
+  crashes before the rename are invisible (a retry replaces the unlisted
+  dir), and old versions stay readable (time travel) until vacuumed.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import tempfile
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,48 +77,88 @@ class VersionedStore:
         self.path = path
         self._manifest_dir = os.path.join(path, "_manifest")
         self._data_dir = os.path.join(path, "data")
+        # the Hadoop FileSystem of ``path``: local, ``file:`` and HDFS alike
+        self._hpath = spark._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
 
     # -- manifest plumbing -------------------------------------------------
 
+    def _manifest_path(self, version: int):
+        return self._hpath(os.path.join(self._manifest_dir, f"v{version:010d}.json"))
+
+    def _delete(self, path: str) -> None:
+        self._fs.delete(self._hpath(path), True)
+
     def versions(self) -> list[int]:
-        if not os.path.isdir(self._manifest_dir):
-            return []
-        out = []
-        for name in os.listdir(self._manifest_dir):
-            if name.startswith("v") and name.endswith(".json"):
-                out.append(int(name[1:-5]))
-        return sorted(out)
+        pattern = self._hpath(os.path.join(self._manifest_dir, "v*.json"))
+        found = self._fs.globStatus(pattern) or []
+        return sorted(int(st.getPath().getName()[1:-5]) for st in found)
 
     def latest_version(self) -> int | None:
         vs = self.versions()
         return vs[-1] if vs else None
 
     def _manifest(self, version: int) -> dict:
-        with open(os.path.join(self._manifest_dir, f"v{version:010d}.json")) as fh:
-            return json.load(fh)
+        io_utils = self.spark._jvm.org.apache.hadoop.io.IOUtils
+        stream = self._fs.open(self._manifest_path(version))
+        try:
+            return json.loads(bytes(io_utils.readFullyToByteArray(stream)))
+        finally:
+            stream.close()
+
+    def _snapshot(self, version: int | None = None):
+        """(data dirs, schema) of ``version`` (default latest); None when
+        the store is empty."""
+        version = self.latest_version() if version is None else version
+        if version is None:
+            return None
+        manifest = self._manifest(version)
+        raw = manifest.get("schema")
+        return manifest["data_dirs"], T.StructType.fromJson(raw) if raw else None
 
     def _commit(self, version: int, data_dirs: list[str], operation: str,
-                schema: "T.StructType | None" = None) -> None:
-        os.makedirs(self._manifest_dir, exist_ok=True)
-        payload = json.dumps(
-            {
-                "version": version,
-                "data_dirs": data_dirs,
-                "operation": operation,
-                **({"schema": schema.jsonValue()} if schema is not None else {}),
-            }
-        )
-        fd, tmp = tempfile.mkstemp(dir=self._manifest_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(payload)
+                schema: "T.StructType") -> None:
+        payload = json.dumps({"version": version, "data_dirs": data_dirs,
+                              "operation": operation, "schema": schema.jsonValue()})
+        tmp = self._hpath(os.path.join(self._manifest_dir, f".v{version:010d}.tmp"))
+        out = self._fs.create(tmp, True)
+        try:
+            out.write(payload.encode("utf-8"))
+        finally:
+            out.close()
         # rename is the atomic visibility switch
-        os.rename(tmp, os.path.join(self._manifest_dir, f"v{version:010d}.json"))
+        if not self._fs.rename(tmp, self._manifest_path(version)):
+            raise OSError(f"could not publish version {version} of {self.path}")
+
+    def _publish(self, df: DataFrame | None, keep_dirs: list[str],
+                 operation: str, schema: "T.StructType",
+                 partition_by: str | None = None) -> int:
+        """The one commit protocol: write ``df`` once into a fresh
+        ``data/v{N}/``, then commit version N listing ``keep_dirs`` plus the
+        new dir (under ``partition_by``: its partition dirs). An existing
+        ``data/v{N}/`` is the leftover of a crash before the rename — no
+        manifest lists it — and is replaced. ``df=None`` commits
+        ``keep_dirs`` alone. Returns N."""
+        latest = self.latest_version()
+        version = 0 if latest is None else latest + 1
+        dirs = list(keep_dirs)
+        if df is not None:
+            new_dir = os.path.join(self._data_dir, f"v{version:010d}")
+            self._delete(new_dir)
+            if partition_by is None:
+                df.write.parquet(new_dir)
+                dirs.append(new_dir)
+            else:
+                df.write.partitionBy(partition_by).parquet(new_dir)
+                dirs += sorted(
+                    os.path.join(new_dir, st.getPath().getName())
+                    for st in self._fs.listStatus(self._hpath(new_dir))
+                    if st.isDirectory()
+                )
+        self._commit(version, dirs, operation, schema)
+        return version
 
     # -- writes ------------------------------------------------------------
-
-    def _schema_of(self, version: int) -> "T.StructType | None":
-        raw = self._manifest(version).get("schema")
-        return T.StructType.fromJson(raw) if raw else None
 
     def _evolve_schema(
         self, prev: "T.StructType | None", df: DataFrame, merge_schema: bool
@@ -169,29 +208,20 @@ class VersionedStore:
         widens and older files read back with nulls in the new columns."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode: {mode}")
-        latest = self.latest_version()
-        version = 0 if latest is None else latest + 1
-        if mode == "append" and latest is not None:
-            target = self._evolve_schema(self._schema_of(latest), df, merge_schema)
-            df = self._align(df, target)
-        else:
-            target = df.schema
-        new_dir = os.path.join(self._data_dir, f"v{version:010d}")
-        df.write.parquet(new_dir)
-        if mode == "append" and latest is not None:
-            dirs = self._manifest(latest)["data_dirs"] + [new_dir]
-        else:
-            dirs = [new_dir]
-        self._commit(version, dirs, mode, schema=target)
-        return version
+        snap = self._snapshot() if mode == "append" else None
+        if snap is None:
+            return self._publish(df, [], mode, df.schema)
+        target = self._evolve_schema(snap[1], df, merge_schema)
+        return self._publish(self._align(df, target), snap[0], mode, target)
 
-    def _affected_dirs(self, cur: DataFrame, match: DataFrame | None,
-                       condition=None, key_columns: list[str] | None = None
-                       ) -> list[str]:
-        """Data dirs of the current version that contain at least one row
+    def _affected_dirs(self, cur: DataFrame, dirs: list[str],
+                       match: DataFrame | None, condition=None,
+                       key_columns: list[str] | None = None) -> list[str]:
+        """The ``dirs`` of the current version that contain at least one row
         matched by ``condition`` or by a key semi-join against ``match``.
         The distinct file list is tiny relative to the data (one entry per
-        parquet file), so collecting it on the driver is safe at any scale."""
+        parquet file), so collecting it on the driver is safe at any scale.
+        Dirs and files compare as absolute paths (``file:`` URIs included)."""
         probe = cur.withColumn("__file", F.input_file_name())
         if condition is not None:
             probe = probe.filter(condition)
@@ -200,7 +230,11 @@ class VersionedStore:
                 match.select(*key_columns).distinct(), key_columns, "left_semi"
             )
         files = [r["__file"] for r in probe.select("__file").distinct().collect()]
-        return sorted({os.path.dirname(urlparse(f).path or f) for f in files})
+        found = {os.path.dirname(unquote(urlparse(f).path)) for f in files}
+        return [
+            d for d in dirs
+            if self._fs.makeQualified(self._hpath(d)).toUri().getPath() in found
+        ]
 
     def merge(self, source: DataFrame, key_columns: list[str]) -> int:
         """Delta-style MERGE (upsert) with directory-granular copy-on-write:
@@ -210,72 +244,57 @@ class VersionedStore:
         reference, so merge cost scales with the touched fraction, not the
         table size. Source must not carry duplicate keys (last-writer
         ambiguity); callers dedup first."""
-        latest = self.latest_version()
-        if latest is None:
+        snap = self._snapshot()
+        if snap is None:
             return self.write(source, mode="overwrite")
-        cur = self.read()
+        dirs, schema = snap
+        cur = self._read_dirs(dirs, schema)
         source = self._align(
             source, self._evolve_schema(cur.schema, source, merge_schema=False)
         )
-        affected = self._affected_dirs(cur, source, key_columns=key_columns)
-        keep_dirs = [
-            d for d in self._manifest(latest)["data_dirs"] if d not in affected
-        ]
-        version = latest + 1
-        new_dir = os.path.join(self._data_dir, f"v{version:010d}")
+        affected = self._affected_dirs(cur, dirs, source, key_columns=key_columns)
         if affected:
             # read rewrite candidates with the MANIFEST schema: dirs written
             # before a schema evolution lack the newer columns
-            survivors = self.spark.read.schema(cur.schema).parquet(*affected).join(
+            survivors = self._read_dirs(affected, cur.schema).join(
                 source.select(*key_columns).distinct(), key_columns, "left_anti"
             )
-            survivors.unionByName(source).write.parquet(new_dir)
-        else:
-            source.write.parquet(new_dir)
-        self._commit(version, keep_dirs + [new_dir], "merge", schema=cur.schema)
-        return version
+            source = survivors.unionByName(source)
+        keep_dirs = [d for d in dirs if d not in affected]
+        return self._publish(source, keep_dirs, "merge", cur.schema)
 
     def delete_where(self, condition) -> int:
         """Delete rows matching ``condition`` (a Column), copy-on-write at
         directory granularity: only dirs containing a matching row are
         rewritten without those rows; the rest carry over by reference."""
-        latest = self.latest_version()
-        if latest is None:
+        snap = self._snapshot()
+        if snap is None:
             raise ValueError("delete_where on an empty store")
-        cur = self.read()
-        affected = self._affected_dirs(cur, None, condition=condition)
-        keep_dirs = [
-            d for d in self._manifest(latest)["data_dirs"] if d not in affected
-        ]
-        version = latest + 1
-        if affected:
-            new_dir = os.path.join(self._data_dir, f"v{version:010d}")
-            survivors = (
-                self.spark.read.schema(cur.schema).parquet(*affected)
-                .filter(~condition)
-            )
-            survivors.write.parquet(new_dir)
-            keep_dirs = keep_dirs + [new_dir]
-        self._commit(version, keep_dirs, "delete", schema=cur.schema)
-        return version
+        dirs, schema = snap
+        cur = self._read_dirs(dirs, schema)
+        affected = self._affected_dirs(cur, dirs, None, condition=condition)
+        survivors = (
+            self._read_dirs(affected, cur.schema).filter(~condition)
+            if affected else None
+        )
+        keep_dirs = [d for d in dirs if d not in affected]
+        return self._publish(survivors, keep_dirs, "delete", cur.schema)
 
     # -- reads -------------------------------------------------------------
 
     def read(self, version: int | None = None) -> DataFrame | None:
         """Latest committed state, or any historical version (time travel)."""
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                return None
-        manifest = self._manifest(version)
-        schema = self._schema_of(version)
+        snap = self._snapshot(version)
+        return None if snap is None else self._read_dirs(*snap)
+
+    def _read_dirs(self, dirs: list[str], schema: "T.StructType | None"
+                   ) -> DataFrame:
+        """``dirs`` read with the manifest schema: files written before an
+        evolution lack the newer columns and read back null-filled."""
+        if not dirs:
+            return self.spark.createDataFrame([], schema)
         reader = self.spark.read
-        if schema is not None:
-            # explicit manifest schema: files written before an evolution
-            # lack the newer columns and read back null-filled; each
-            # historical version keeps the schema it was committed with
-            reader = reader.schema(schema)
-        return reader.parquet(*manifest["data_dirs"])
+        return (reader if schema is None else reader.schema(schema)).parquet(*dirs)
 
     def changes(self, since_version: int, to_version: int | None = None
                 ) -> DataFrame:
@@ -288,22 +307,15 @@ class VersionedStore:
         scan of pre-existing data. Otherwise (merge/delete/overwrite in
         between) it falls back to a distributed multiset diff (exceptAll),
         which is exact but scans both snapshots."""
-        if to_version is None:
-            to_version = self.latest_version()
-        old_dirs = list(self._manifest(since_version)["data_dirs"])
-        new_dirs = list(self._manifest(to_version)["data_dirs"])
-        added = [d for d in new_dirs if d not in old_dirs]
+        old_dirs, old_schema = self._snapshot(since_version)
+        new_dirs, new_schema = self._snapshot(to_version)
         if all(d in new_dirs for d in old_dirs):
-            if not added:
-                base = self.read(to_version)
-                return base.filter(F.lit(False)).withColumn(
-                    "_change_type", F.lit("insert")
-                )
-            return self.spark.read.parquet(*added).withColumn(
+            added = [d for d in new_dirs if d not in old_dirs]
+            return self._read_dirs(added, new_schema).withColumn(
                 "_change_type", F.lit("insert")
             )
-        old = self.read(since_version)
-        new = self.read(to_version)
+        old = self._read_dirs(old_dirs, old_schema)
+        new = self._read_dirs(new_dirs, new_schema)
         inserts = new.exceptAll(old).withColumn("_change_type", F.lit("insert"))
         deletes = old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
         return inserts.unionByName(deletes)
@@ -315,25 +327,20 @@ class VersionedStore:
         ``vacuum`` later reclaims the small files. This is the antidote to
         the small-file problem a long-lived append stream creates: N
         micro-batch commits = N dirs until an optimize folds them."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError("optimize on an empty store")
         cur = self.read()
+        if cur is None:
+            raise ValueError("optimize on an empty store")
         if target_partitions is not None:
             cur = cur.repartition(target_partitions)
-        version = latest + 1
-        new_dir = os.path.join(self._data_dir, f"v{version:010d}")
-        cur.write.parquet(new_dir)
-        self._commit(version, [new_dir], "optimize", schema=cur.schema)
-        return version
+        return self._publish(cur, [], "optimize", cur.schema)
 
     # -- maintenance -------------------------------------------------------
 
     def vacuum(self, keep_latest: int = 1) -> list[int]:
         """Drop manifests (and data dirs referenced by no surviving version)
-        older than the ``keep_latest`` most recent. Returns removed versions."""
-        import shutil
-
+        older than the ``keep_latest`` most recent. Returns removed versions.
+        A partition dir takes its version dir along once no survivor lists
+        anything under that version dir."""
         vs = self.versions()
         doomed = vs[:-keep_latest] if keep_latest > 0 else vs
         survivors = vs[-keep_latest:] if keep_latest > 0 else []
@@ -342,7 +349,10 @@ class VersionedStore:
             still_referenced.update(self._manifest(v)["data_dirs"])
         for v in doomed:
             for d in self._manifest(v)["data_dirs"]:
-                if d not in still_referenced and os.path.isdir(d):
-                    shutil.rmtree(d)
-            os.remove(os.path.join(self._manifest_dir, f"v{v:010d}.json"))
+                if d in still_referenced:
+                    continue
+                parent = os.path.dirname(d)
+                shared = any(r.startswith(parent + "/") for r in still_referenced)
+                self._delete(d if parent == self._data_dir or shared else parent)
+            self._fs.delete(self._manifest_path(v), False)
         return doomed

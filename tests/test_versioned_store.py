@@ -260,3 +260,30 @@ def test_datasource_reads_evolved_schema(spark, tmp_path):
         .option("path", path).option("version", 0).load()
     )
     assert set(old.columns) == {"id", "v"}
+
+
+def test_merge_retry_replaces_uncommitted_leftover_dir(spark, store, tmp_path):
+    """A merge that crashed before its manifest rename leaves a partial
+    ``data/v{N}`` that no manifest lists; the retry replaces it and ends
+    equal to a run that never crashed."""
+    df = lambda rows: spark.createDataFrame(rows, "k int, v string")  # noqa: E731
+    clean = VersionedStore(spark, str(tmp_path / "clean"))
+    for s in (store, clean):
+        s.write(df([(1, "a"), (2, "b")]), mode="append")      # v0
+    spark.range(3).write.parquet(os.path.join(store.path, "data", f"v{1:010d}"))
+    batch = df([(2, "B"), (3, "c")])
+    assert store.merge(batch, key_columns=["k"]) == clean.merge(batch, ["k"]) == 1
+    got = {(r["k"], r["v"]) for r in store.read().collect()}
+    assert got == {(r["k"], r["v"]) for r in clean.read().collect()}
+    assert got == {(1, "a"), (2, "B"), (3, "c")}
+
+
+def test_merge_and_delete_on_file_uri_path(spark, tmp_path):
+    """With the store path given as a ``file:`` URI, MERGE and DELETE still
+    find the dirs they touch: matched rows are replaced, not duplicated."""
+    store = VersionedStore(spark, (tmp_path / "vstore").as_uri())
+    df = lambda rows: spark.createDataFrame(rows, "k int, v string")  # noqa: E731
+    store.write(df([(1, "a"), (2, "b")]), mode="append")
+    store.merge(df([(2, "B")]), key_columns=["k"])
+    store.delete_where(F.col("k") == 1)
+    assert [(r["k"], r["v"]) for r in store.read().collect()] == [(2, "B")]
